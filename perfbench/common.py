@@ -12,7 +12,9 @@ import contextlib
 import os
 import platform
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -20,6 +22,10 @@ import time
 #: Driver heap: sized for a 4-core, 15 GB host that other jobs share;
 #: every workload's working set fits well inside 2 GB.
 DRIVER_MEM = "2g"
+#: The JIT's compiler threads live as long as the JVM, so ``CpuClock`` can
+#: read their CPU time apart from the rest (by default HotSpot starts and
+#: retires them as the compile queue grows and shrinks).
+JVM_OPTIONS = "-XX:-UseDynamicNumberOfCompilerThreads"
 
 
 def nproc() -> int:
@@ -51,6 +57,7 @@ def pin_environment(work: str) -> dict:
         "_steal0": steal_seconds(),
         "nproc": nproc(),
         "driver_mem": DRIVER_MEM,
+        "jvm_options": JVM_OPTIONS,
         "master": f"local[{nproc()}]",
         "loadavg_start": list(os.getloadavg()),
         "python": platform.python_version(),
@@ -71,7 +78,7 @@ def get_session(work: str):
     spark = _get(
         "perfbench",
         extra_confs={
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
+            "spark.driver.extraJavaOptions": f"{JVM_OPTIONS} -Djava.io.tmpdir={tmp}",
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             "spark.sql.streaming.numRecentProgressUpdates": "2000",
         },
@@ -81,7 +88,7 @@ def get_session(work: str):
     return spark
 
 
-def set_up(work: str, restarts: int = 3):
+def set_up(work: str, restarts: int = 5):
     """Start the session, then tear it down and start it again
     ``restarts`` times in the same JVM.
 
@@ -113,19 +120,37 @@ def versions(spark) -> dict:
 
 class CpuClock:
     """CPU seconds (user + system) used so far by the driver JVM and this
-    Python process. Time the hypervisor gives other guests (steal) is not
-    charged to a process, so a pass's CPU seconds move far less with the
-    host's load than its wall time does."""
+    Python process, and the part of them the JVM's JIT compiler threads
+    used. Time the hypervisor gives other guests (steal) is not charged to
+    a process, so a pass's CPU seconds move far less with the host's load
+    than its wall time does."""
 
     def __init__(self, spark):
-        self._stat = f"/proc/{spark._jvm.java.lang.ProcessHandle.current().pid()}/stat"
+        pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+        self._stat = f"/proc/{pid}/stat"
         self._tck = os.sysconf("SC_CLK_TCK")
+        self._jit = []
+        for tid in os.listdir(f"/proc/{pid}/task"):
+            try:
+                with open(f"/proc/{pid}/task/{tid}/comm") as fh:
+                    name = fh.read()
+            except OSError:  # a thread that ended since the listing
+                continue
+            if "CompilerThre" in name:
+                self._jit.append(f"/proc/{pid}/task/{tid}/stat")
+        if not self._jit:
+            raise RuntimeError(f"no JIT compiler threads found in JVM {pid}")
 
-    def read(self) -> float:
-        with open(self._stat) as fh:
+    def _cpu(self, stat: str) -> float:
+        with open(stat) as fh:
             fields = fh.read().rsplit(")", 1)[1].split()
+        return (int(fields[11]) + int(fields[12])) / self._tck
+
+    def read(self) -> tuple[float, float]:
+        """(all CPU seconds, JIT compiler threads' CPU seconds)."""
         own = os.times()
-        return (int(fields[11]) + int(fields[12])) / self._tck + own.user + own.system
+        total = self._cpu(self._stat) + own.user + own.system
+        return total, sum(self._cpu(t) for t in self._jit)
 
 
 def _hwm_kb(pid: int | str) -> int:
@@ -254,20 +279,26 @@ class Tracer:
 
 
 
-def closed_loop(one, seconds: float, trace: bool) -> dict:
-    """Drive ``one(traced: bool) -> (wall s, CPU s)`` as one closed-loop
-    client: a cold pass, one unmeasured warm-up pass (the second pass in a
-    JVM still runs much of the planner before the JIT has compiled it),
-    then measured passes until ``seconds`` have passed and at least three
-    ran. A traced run pairs every measured pass with a traced one,
-    alternating the order of each pair so that the JIT warming across
-    passes does not bias the overhead estimate."""
+def closed_loop(one, seconds: float, trace: bool, warm: int, nominal_pass_s: float) -> dict:
+    """Drive ``one(traced: bool) -> (wall s, CPU s, JIT CPU s)`` as one
+    closed-loop client: a cold pass, ``warm`` unmeasured warm-up passes,
+    then ``seconds / nominal_pass_s`` measured passes (at least three).
+
+    The JIT keeps compiling for many passes, and a pass's CPU seconds
+    fall as it does; a fixed pass count measures the same passes of that
+    curve on a fast host and a slow one, where a fixed time would not.
+    ``nominal_pass_s`` is a warm pass's wall time on a quiet 4-core host;
+    measuring stops early, after three passes, once three times
+    ``seconds`` have gone by. A traced run pairs every measured pass
+    with a traced one, alternating the order of each pair so that the
+    JIT warming across passes does not bias the overhead estimate."""
     cold = one(False)[0]
-    warmup = one(False)[0]
-    measured: list[tuple[float, float]] = []
+    warmups = [one(False)[0] for _ in range(warm)]
+    n = max(3, round(seconds / nominal_pass_s))
+    measured: list[tuple[float, float, float]] = []
     traced: list[float] = []
-    t_end = time.perf_counter() + seconds
-    while time.perf_counter() < t_end or len(measured) < 3:
+    t_end = time.perf_counter() + 3 * seconds
+    while len(measured) < n and (len(measured) < 3 or time.perf_counter() < t_end):
         if trace and len(measured) % 2:
             traced.append(one(True)[0])
             measured.append(one(False))
@@ -277,9 +308,10 @@ def closed_loop(one, seconds: float, trace: bool) -> dict:
                 traced.append(one(True)[0])
     return {
         "cold": cold,
-        "warmup": warmup,
-        "walls": [w for w, _ in measured],
-        "cpus": [c for _, c in measured],
+        "warmup": warmups,
+        "walls": [w for w, _, _ in measured],
+        "cpus": [c for _, c, _ in measured],
+        "exec_cpus": [c - j for _, c, j in measured],
         "traced": traced,
     }
 
@@ -318,6 +350,70 @@ def release(spark) -> None:
 
     gc.collect()
     spark._jvm.java.lang.System.gc()
+
+
+def _descendants(pid: int) -> list[int]:
+    """Every live process under ``pid``, read from /proc."""
+    children: dict[int, list[int]] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        children.setdefault(ppid, []).append(int(name))
+    out, todo = [], [pid]
+    while todo:
+        kids = children.get(todo.pop(), [])
+        out += kids
+        todo += kids
+    return out
+
+
+def _alive(pid: int) -> bool:
+    """True while ``pid`` exists and is not a zombie."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            return fh.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except OSError:
+        return False
+
+
+def stop_jvm(timeout: float = 30.0) -> None:
+    """Stop the driver JVM this process launched, and every process under
+    it, and wait until each has ended.
+
+    ``spark.stop()`` leaves the JVM running; it only exits once it sees
+    this process's end of its stdin close, which would otherwise happen
+    after this process has already exited."""
+    from pyspark import SparkContext
+
+    procs = [p for p in _descendants(os.getpid()) if _alive(p)]
+    if SparkContext._active_spark_context is not None:
+        with contextlib.suppress(Exception):
+            SparkContext._active_spark_context.stop()
+    # no py4j close: with a foreachBatch callback server it can block
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None:
+        with contextlib.suppress(OSError):
+            proc.stdin.close()  # the JVM's signal to exit
+        try:
+            proc.wait(timeout)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    t_end = time.monotonic() + timeout
+    for pid in procs:
+        while _alive(pid) and time.monotonic() < t_end:
+            time.sleep(0.05)
+        if _alive(pid):
+            with contextlib.suppress(OSError):
+                os.kill(pid, signal.SIGKILL)
+            t_kill = time.monotonic() + timeout
+            while _alive(pid) and time.monotonic() < t_kill:
+                time.sleep(0.05)
 
 
 def rmtree(path: str) -> None:

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import signal
 import statistics
@@ -49,19 +50,29 @@ def main() -> int:
 
     import common
 
-    # a timeout sends SIGTERM: unwind so the JVM stops and the scratch
-    # directory goes
+    # a timeout sends SIGTERM: unwind so the JVM and every process under
+    # it end and the scratch directory goes
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     run_id = f"{args.workload}-{args.seed}-t{args.trace}-{os.getpid()}"
     work = os.path.join(ROOT, ".perfbench_work", run_id)
     settings = common.pin_environment(work)
     try:
-        return _run(args, spec, run_id, work, settings)
+        result = _run(args, spec, run_id, work, settings)
     finally:
+        # py4j proxies collected from here on try to reach a JVM that is
+        # stopping or gone, and log the failure
+        logging.disable(logging.CRITICAL)
+        common.stop_jvm()
         common.rmtree(work)
+    if result is None:
+        return 3
+    print(json.dumps(result), flush=True)
+    return 0
 
 
-def _run(args, spec: dict, run_id: str, work: str, settings: dict) -> int:
+def _run(args, spec: dict, run_id: str, work: str, settings: dict) -> dict | None:
+    """Run the workload; returns the result line, or None when a metric
+    was not measured."""
     import common
 
     if args.workload == "corpus_dedup":
@@ -100,7 +111,7 @@ def _run(args, spec: dict, run_id: str, work: str, settings: dict) -> int:
     missing = [n for n in names if chosen.get(n) is None]
     if missing:
         print(f"metrics not measured: {missing}", file=sys.stderr)
-        return 3
+        return None
 
     attempted, failed = res["attempted"], res["failed"]
     correct = failed == 0 and not res.get("rejected", False)
@@ -124,17 +135,12 @@ def _run(args, spec: dict, run_id: str, work: str, settings: dict) -> int:
     os.makedirs(os.path.dirname(out), exist_ok=True)
     with open(out, "w") as fh:
         json.dump(record, fh, indent=1, default=str)
-    print(
-        json.dumps(
-            {
-                "correct": correct,
-                "attempted": attempted,
-                "failed": failed,
-                "metrics": {n: {"value": chosen[n], "unit": units[n]} for n in names},
-            }
-        )
-    )
-    return 0
+    return {
+        "correct": correct,
+        "attempted": attempted,
+        "failed": failed,
+        "metrics": {n: {"value": chosen[n], "unit": units[n]} for n in names},
+    }
 
 
 def _report(args, res, metrics, restarts, cold_start, correct, wall) -> None:
@@ -144,7 +150,8 @@ def _report(args, res, metrics, restarts, cold_start, correct, wall) -> None:
     print(f"  run wall {wall:.1f} s; session cold start {cold_start:.2f} s")
     print(f"  setup_s {metrics['setup_s']:.3f} s (median of {len(restarts)})")
     print(f"  peak_rss_mb {metrics['peak_rss_mb']:.0f} MB (1)")
-    print(f"  pass_cpu_s {metrics['pass_cpu_s']:.3f} s (median of {len(res['info']['pass_cpu_s'])})")
+    n = len(res["info"]["pass_exec_cpu_s"])
+    print(f"  pass_exec_cpu_s {metrics['pass_exec_cpu_s']:.3f} s (median of {n})")
     ratio = res["failed"] / max(1, res["attempted"])
     print(f"  ops_failed_ratio {ratio:.4f} ({res['failed']}/{res['attempted']})")
     for name, (value, unit, n) in res["named"].items():
